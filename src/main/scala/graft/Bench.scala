@@ -22,11 +22,7 @@ import java.nio.file.{Files, Paths}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
+    val spark = LocalSession(extraConf = Map(
       // Round 17 (in-run vs isolated tail gap, second iteration): the
       // ContextCleaner only reclaims dead shuffle files and
       // localCheckpoint blocks after a DRIVER GC processes their weak
@@ -42,8 +38,7 @@ object Bench {
       // long-running-driver practice, a no-op for short dev runs; the
       // adjudication protocol (SCALE.md) keeps isolated min-of-3 as
       // the per-operator ground truth either way.
-      .config("spark.cleaner.periodicGC.interval", "5min")
-      .getOrCreate()
+      "spark.cleaner.periodicGC.interval" -> "5min"))
     spark.sparkContext.setLogLevel("WARN")
     // Round 18 (VERDICT r17 #2/#3): warm-up elapsed is REPORTED in both
     // JSON outputs ("warm_sec") so the amortized-index claim is
@@ -67,7 +62,7 @@ object Bench {
     // every reuse-materialized frame pinned across the 373-query loop
     // made the sf1 TAIL numbers cache-pressure artifacts, not operator
     // costs — dedup_cluster archived 198-208 s in-run vs 33-37 s
-    // isolated min-of-3 (ClusterAB, SCALE.md round-16) because earlier
+    // isolated min-of-3 (SCALE.md round-16) because earlier
     // queries' persisted frames evicted its shingle cache. An archive
     // whose tail can't be compared across rounds is worse than the
     // ~15-20 s of legitimate cross-query reuse it bought, so the cache

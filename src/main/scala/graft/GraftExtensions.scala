@@ -2,16 +2,16 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo}
-import org.apache.spark.sql.types.DoubleType
-import graft.functions.{ArrayFloatDot, NullSafeDiv, SimHash64}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import graft.functions.GraftFunctions
 
 /** Cluster-deployment entry point: register graft's custom functions
   * at session build time via
   * `--conf spark.sql.extensions=graft.GraftExtensions`
   * (or `SparkSession.builder().withExtensions(new GraftExtensions)`).
   *
-  * Equivalent to [[graft.functions.GraftFunctions.register]] but wired
+  * Installs the same function table as
+  * [[graft.functions.GraftFunctions.register]], but wired
   * through the public SparkSessionExtensions injection API so every
   * session on a cluster — including Thrift/Connect sessions the
   * library never touches directly — sees the functions.
@@ -19,22 +19,10 @@ import graft.functions.{ArrayFloatDot, NullSafeDiv, SimHash64}
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      FunctionIdentifier("null_safe_div"),
-      new ExpressionInfo(classOf[NullSafeDiv].getCanonicalName, "null_safe_div"),
-      (exprs: Seq[Expression]) =>
-        NullSafeDiv(Cast(exprs.head, DoubleType), Cast(exprs(1), DoubleType))))
-    // Mirror GraftFunctions.register: the similarity/dedup operators
-    // (GraftOps.simhashPairs, cosineTopK, ivfTopK) resolve these by
-    // name, so extension-configured sessions need them too.
-    e.injectFunction((
-      FunctionIdentifier("array_dot"),
-      new ExpressionInfo(classOf[ArrayFloatDot].getCanonicalName, "array_dot"),
-      (exprs: Seq[Expression]) => ArrayFloatDot(exprs.head, exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getCanonicalName, "simhash64"),
-      (exprs: Seq[Expression]) => SimHash64(exprs.head)))
+    GraftFunctions.all.foreach { case (name, cls, builder) =>
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(cls.getCanonicalName, name), builder))
+    }
     // The HOF dot-product spelling fuses into the codegen'd expression
     // for every session on the cluster — see plans.DotProductFusion.
     e.injectOptimizerRule(_ => graft.plans.DotProductFusion)

@@ -273,54 +273,19 @@ object GraftOps {
   def minHashNearDupPairs(df: DataFrame, idCol: String, textCol: String,
       maxJaccardDist: Double = 0.5, shingleSize: Int = 3,
       numHashTables: Int = 5, seed: Long = 42L): DataFrame = {
-    val feat = minHashSignatures(df, idCol, textCol, shingleSize,
-      numHashTables, seed).select(col(idCol), col("__features"),
-        col("__hashes")).cache()
-    minHashNearDupPairsFromSignatures(feat, idCol, maxJaccardDist,
-      numHashTables, seed)
-  }
-
-  /** The per-document MinHash signature frame (idCol, __features,
-    * __hashes) the LSH tier joins on — exposed so it can be PERSISTED
-    * once per corpus (round 18 — VERDICT r17 #4, the IVF/SimGraph
-    * index precedent applied to signatures): features and hashes are a
-    * pure per-doc function of the text (HashingTF is stateless;
-    * MinHashLSH's coefficients are drawn from `seed` alone, never from
-    * data), so a fingerprint-keyed parquet of this frame feeds
-    * [[minHashNearDupPairsFromSignatures]] bit-identically.
-    */
-  def minHashSignatures(df: DataFrame, idCol: String, textCol: String,
-      shingleSize: Int = 3, numHashTables: Int = 5,
-      seed: Long = 42L): DataFrame = {
     val sh = shingles(df, textCol, shingleSize, "__shingles")
     val tf = new HashingTF().setInputCol("__shingles").setOutputCol("__features")
       .setNumFeatures(1 << 18).setBinary(true)
     val feat = tf.transform(sh).select(col(idCol), col("__features"))
-    new MinHashLSH().setInputCol("__features").setOutputCol("__hashes")
-      .setNumHashTables(numHashTables).setSeed(seed)
-      .fit(feat).transform(feat)
-  }
-
-  /** [[minHashNearDupPairs]] over an existing signature frame
-    * (idCol, __features, __hashes — see [[minHashSignatures]]).
-    * approxSimilarityJoin uses the provided `__hashes` column as-is
-    * (MLlib only re-transforms when the output column is absent), so
-    * neither shingling, TF, nor the per-row MinHash UDF runs at query
-    * time — the candidate join and the exact Jaccard-distance verify
-    * are unchanged. The `fit` below only draws the seed-deterministic
-    * hash coefficients (data-independent), kept identical to the
-    * direct tier's.
-    */
-  def minHashNearDupPairsFromSignatures(sig: DataFrame, idCol: String,
-      maxJaccardDist: Double = 0.5, numHashTables: Int = 5,
-      seed: Long = 42L): DataFrame = {
     val lsh = new MinHashLSH().setInputCol("__features").setOutputCol("__hashes")
-      .setNumHashTables(numHashTables).setSeed(seed)
-    // fit validates that the OUTPUT column is absent — drop it for the
-    // (data-independent, seed-only) fit; the join then consumes sig's
-    // existing __hashes column as-is
-    lsh.fit(sig.drop("__hashes"))
-      .approxSimilarityJoin(sig, sig, maxJaccardDist, "jaccard_dist")
+      .setNumHashTables(numHashTables).setSeed(seed).fit(feat)
+    // The MinHash transform runs AHEAD of the cache: approxSimilarityJoin
+    // uses an existing `__hashes` column as-is (MLlib only re-transforms
+    // when it is absent), so the per-row hashing runs once instead of
+    // once per join side. The coefficients come from `seed` alone.
+    val sig = reuseMaterializer(df, None)(lsh.transform(feat)
+      .select(col(idCol), col("__features"), col("__hashes")))
+    lsh.approxSimilarityJoin(sig, sig, maxJaccardDist, "jaccard_dist")
       .filter(col(s"datasetA.$idCol") < col(s"datasetB.$idCol"))
       .select(col(s"datasetA.$idCol").as("a_id"), col(s"datasetB.$idCol").as("b_id"))
   }
@@ -345,46 +310,18 @@ object GraftOps {
     * runs on candidates only.
     */
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int = 6, minJaccard: Double = 0.5): DataFrame =
-    simhashPairsFromSignatures(
-      simhashSignatures(df, idCol, textCol), idCol, maxHamming, minJaccard)
-
-  /** The per-document SimHash signature frame (idCol, __simhash, __w)
-    * — fingerprint + 3-gram shingle set, the two per-doc inputs the
-    * banding and the verify consume. Exposed for PERSISTENCE (round 18
-    * — VERDICT r17 #4): both columns are pure per-doc functions of the
-    * text, so a fingerprint-keyed parquet of this frame feeds
-    * [[simhashPairsFromSignatures]] identically while the query-side
-    * plan's 4 corpus scans (banding evaluates simhash64(split(text))
-    * per side, the verify rebuilds the shingle arrays per side) become
-    * column-pruned reads of the signature table.
-    */
-  def simhashSignatures(df: DataFrame, idCol: String,
-      textCol: String): DataFrame =
+      maxHamming: Int = 6, minJaccard: Double = 0.5): DataFrame = {
     // Fingerprint votes over the word MULTISET (unchanged semantics).
     // The verify compares 3-gram SHINGLE sets — order-sensitive on
     // purpose: distinct-token sets cannot separate near-identical
     // docs from same-vocabulary permutations (measured max token-set
     // Jaccard 1.0 between unrelated docs on this corpus).
-    df.select(col(idCol), split(col(textCol), " ").as("__wall"))
+    val words = df.select(col(idCol), split(col(textCol), " ").as("__wall"))
       .withColumn("__simhash", expr("simhash64(__wall)"))
       .withColumn("__w", expr(
         "array_distinct(transform(sequence(1, greatest(size(__wall) - 2, 1)), " +
           "i -> concat_ws(' ', slice(__wall, i, 3))))"))
       .select(col(idCol), col("__simhash"), col("__w"))
-
-  /** [[simhashPairs]] over an existing signature frame (idCol,
-    * __simhash, __w — see [[simhashSignatures]]): Manku-style C(8,2)
-    * block-pair banding + hamming filter + exact shingle-Jaccard
-    * verify, unchanged. (Round 6 measured that materializing the
-    * signature subtree INSIDE one action costs more than recomputation
-    * — wide arrays, cheap expressions; round 18's persisted-signature
-    * path changes the trade because the table is built once per corpus
-    * ACROSS actions and each consumer scan prunes to the one column it
-    * needs.)
-    */
-  def simhashPairsFromSignatures(words: DataFrame, idCol: String,
-      maxHamming: Int = 6, minJaccard: Double = 0.5): DataFrame = {
     // 28 tables, one per unordered byte pair (i, j): key = byte_i ++ byte_j.
     val tables = (0 until 8).combinations(2).toSeq.zipWithIndex.map {
       case (Seq(i, j), t) =>
@@ -445,51 +382,9 @@ object GraftOps {
     val sh = shingles(df, textCol, shingleSize, "__shingles")
       .withColumn("__blk", expr(s"concat_ws(' ', slice(split($textCol, ' '), 1, $blockWords))"))
       .select(col(idCol), col("__blk"), col("__shingles"))
-    // Per-block doc counts: groupBy (map-side combinable, skew-safe)
-    // then a keyed join back; the probe side's hot key is a plain
-    // equi-join AQE can split, unlike the pair-generating self-join.
-    val cnt = sh.groupBy("__blk").agg(count(lit(1)).as("__bn"))
-    // (id, blk, shingles, block-count) feeds both routes' candidate
-    // generation AND both verify joins — up to 6 plan occurrences of
-    // the shingle build with no canonical-exchange reuse between
-    // them. Materialize it once ([[reuseMaterializer]]: lazy
-    // MEMORY_AND_DISK cache by default — computed once inside the
-    // consuming action, no extra job — reliable checkpoint under
-    // `checkpointDir`): every downstream branch re-reads cached
-    // blocks instead of re-splitting text.
-    val tagged = mat(sh.join(cnt, "__blk"))
-    val small = tagged.filter(col("__bn") <= maxBlock).drop("__bn")
-    val hot = tagged.filter(col("__bn") > maxBlock).drop("__bn")
-    val smallPairs = small.select(col(idCol).as("a_id"), col("__blk"), col("__shingles").as("sa"))
-      .join(small.select(col(idCol).as("b_id"), col("__blk").as("b_blk"), col("__shingles").as("sb")),
-        col("__blk") === col("b_blk") && col("a_id") < col("b_id"))
-      .select("a_id", "b_id", "sa", "sb")
-    // Hot route: 8 deterministic min-md5 sub-hashes over the SAME
-    // shingle set, 4 bands × 2 rows, equi-join on (block, band, sig).
-    val hx = hot.select(col(idCol), col("__blk"), explode(col("__shingles")).as("__s"))
-    val aggs = (0 until 8).map { k =>
-      min(substring(md5(concat(lit(s"${k / 4}:"), col("__s"))), (k % 4) * 8 + 1, 8)).as(s"__h$k")
-    }
-    val mh = hx.groupBy(col(idCol), col("__blk")).agg(aggs.head, aggs.tail: _*)
-    // one agg + band-struct explode (not a unionAll of per-band
-    // selects — see bandSignatures: pruning would re-run the min-md5
-    // agg per band); cached for both self-join sides
-    val bandRows = mat(mh.select(col(idCol), col("__blk"), explode(array((0 until 4).map { b =>
-      struct(lit(b).as("__band"),
-        concat(col(s"__h${2 * b}"), col(s"__h${2 * b + 1}")).as("__sig"))
-    }: _*)).as("__e"))
-      .select(col(idCol), col("__blk"),
-        col("__e.__band").as("__band"), col("__e.__sig").as("__sig")))
-    val cand = bandRows.select(col(idCol).as("a_id"), col("__blk"), col("__band"), col("__sig"))
-      .join(bandRows.select(col(idCol).as("b_id"), col("__blk"), col("__band"), col("__sig")),
-        Seq("__blk", "__band", "__sig"))
-      .filter(col("a_id") < col("b_id"))
-      .select("a_id", "b_id").distinct()
-    val hotPairs = cand
-      .join(hot.select(col(idCol).as("a_id"), col("__shingles").as("sa")), "a_id")
-      .join(hot.select(col(idCol).as("b_id"), col("__shingles").as("sb")), "b_id")
-      .select("a_id", "b_id", "sa", "sb")
-    smallPairs.unionAll(hotPairs)
+    // the hot route bands the SAME word-shingle set the verify compares
+    blockCapPairs(sh, idCol, "__shingles", ("sa", "sb"), maxBlock, mat)(
+        hot => (hot, col("__shingles")))
       .withColumn("jac", size(array_intersect(col("sa"), col("sb"))).cast("double")
         / size(array_union(col("sa"), col("sb"))))
       .filter(col("jac") >= minJaccard)
@@ -528,41 +423,50 @@ object GraftOps {
       substring(col(textCol), 1, prefixLen).as("__p"),
       expr(s"concat_ws(' ', slice(split($textCol, ' '), 1, $blockWords))")
         .as("__blk"))
-    // per-block counts: map-side-combinable groupBy + keyed join back
-    // (the same skew-safe tagging as ngramJaccardPairs — AQE can split
-    // a hot key's JOIN rows, never its n² pair output)
+    // the hot route bands the prefix's character 3-grams
+    blockCapPairs(base, idCol, "__p", ("pa", "pb"), maxBlock, mat) { hot =>
+      (hot.withColumn("__sh", expr(
+          "array_distinct(transform(sequence(1, greatest(length(__p) - 2, 1)), " +
+            "i -> substring(__p, i, 3)))")), col("__sh"))
+    }
+      .withColumn("dist", levenshtein(col("pa"), col("pb")).cast("bigint"))
+      .filter(col("dist") <= maxDist)
+      .select("a_id", "b_id", "dist")
+  }
+
+  /** The block-cap router of [[ngramJaccardPairs]] and
+    * [[fuzzyPrefixPairs]]. `base` is (idCol, `__blk`, `payCol`).
+    * Per-block doc counts come from a map-side-combinable groupBy and
+    * a keyed join back: AQE can split a hot key's JOIN rows, never its
+    * n² pair output. The tagged frame feeds both routes' candidate
+    * generation AND both payload joins — up to 6 plan occurrences
+    * with no canonical-exchange reuse between them — so it is
+    * materialized once through `mat` ([[reuseMaterializer]]). Blocks
+    * of ≤ `maxBlock` docs self-join exactly; hotter blocks go through
+    * [[bandSignatures]] keyed by (doc, block) over the shingle set
+    * `hotShingles` derives from the hot rows — 4 bands × 2 rows,
+    * equi-joined WITHIN the block — and rejoin their payloads.
+    * Returns both routes' candidates as (a_id, b_id, pairCols),
+    * a_id < b_id, each side's payload under its pair name, ready for
+    * the caller's exact verify.
+    */
+  private def blockCapPairs(base: DataFrame, idCol: String, payCol: String,
+      pairCols: (String, String), maxBlock: Int, mat: DataFrame => DataFrame)
+      (hotShingles: DataFrame => (DataFrame, Column)): DataFrame = {
+    val (pa, pb) = pairCols
     val cnt = base.groupBy("__blk").agg(count(lit(1)).as("__bn"))
-    // (id, blk, prefix, block-count) feeds both routes' candidate
-    // generation and both verify joins — materialize once
     val tagged = mat(base.join(cnt, "__blk"))
     val small = tagged.filter(col("__bn") <= maxBlock).drop("__bn")
     val hot = tagged.filter(col("__bn") > maxBlock).drop("__bn")
     val smallPairs = small
-      .select(col(idCol).as("a_id"), col("__blk"), col("__p").as("pa"))
+      .select(col(idCol).as("a_id"), col("__blk"), col(payCol).as(pa))
       .join(small.select(col(idCol).as("b_id"), col("__blk").as("b_blk"),
-          col("__p").as("pb")),
+          col(payCol).as(pb)),
         col("__blk") === col("b_blk") && col("a_id") < col("b_id"))
-      .select("a_id", "b_id", "pa", "pb")
-    // Hot route: character-3-gram shingles of the prefix, 8
-    // deterministic min-md5 sub-hashes, 4 bands × 2 rows, equi-join
-    // on (block, band, sig) — the ngramJaccardPairs hot tier with the
-    // shingle unit swapped from words to characters.
-    val hx = hot.withColumn("__sh", expr(
-        "array_distinct(transform(sequence(1, greatest(length(__p) - 2, 1)), " +
-          "i -> substring(__p, i, 3)))"))
-      .select(col(idCol), col("__blk"), explode(col("__sh")).as("__s"))
-    val aggs = (0 until 8).map { k =>
-      min(substring(md5(concat(lit(s"${k / 4}:"), col("__s"))),
-        (k % 4) * 8 + 1, 8)).as(s"__h$k")
-    }
-    val mh = hx.groupBy(col(idCol), col("__blk")).agg(aggs.head, aggs.tail: _*)
-    val bandRows = mat(mh.select(col(idCol), col("__blk"),
-      explode(array((0 until 4).map { b =>
-        struct(lit(b).as("__band"),
-          concat(col(s"__h${2 * b}"), col(s"__h${2 * b + 1}")).as("__sig"))
-      }: _*)).as("__e"))
-      .select(col(idCol), col("__blk"),
-        col("__e.__band").as("__band"), col("__e.__sig").as("__sig")))
+      .select("a_id", "b_id", pa, pb)
+    val (hx, shingleSet) = hotShingles(hot)
+    // cached: both self-join sides read it
+    val bandRows = mat(bandSignatures(hx, Seq(idCol, "__blk"), shingleSet, 4, 2))
     val cand = bandRows
       .select(col(idCol).as("a_id"), col("__blk"), col("__band"), col("__sig"))
       .join(bandRows.select(col(idCol).as("b_id"), col("__blk"),
@@ -570,13 +474,10 @@ object GraftOps {
       .filter(col("a_id") < col("b_id"))
       .select("a_id", "b_id").distinct()
     val hotPairs = cand
-      .join(hot.select(col(idCol).as("a_id"), col("__p").as("pa")), "a_id")
-      .join(hot.select(col(idCol).as("b_id"), col("__p").as("pb")), "b_id")
-      .select("a_id", "b_id", "pa", "pb")
+      .join(hot.select(col(idCol).as("a_id"), col(payCol).as(pa)), "a_id")
+      .join(hot.select(col(idCol).as("b_id"), col(payCol).as(pb)), "b_id")
+      .select("a_id", "b_id", pa, pb)
     smallPairs.unionAll(hotPairs)
-      .withColumn("dist", levenshtein(col("pa"), col("pb")).cast("bigint"))
-      .filter(col("dist") <= maxDist)
-      .select("a_id", "b_id", "dist")
   }
 
   /** Deterministic ±1 random projection (Johnson–Lindenstrauss) of a
@@ -2341,6 +2242,50 @@ object GraftOps {
         sum(col("__len")).as("n_up"))
   }
 
+  /** The banded min-md5 signature rows (`keyCols`, `__band`, `__sig`)
+    * of every banded-MinHash tier — [[minhashBandPairs]], the
+    * incremental index build/probe pair, and the hot-block routes of
+    * [[ngramJaccardPairs]] / [[fuzzyPrefixPairs]] (keyed by doc AND
+    * block). ONE signature algebra, so an index built today collides
+    * identically with a delta signed tomorrow. `shingleSet` is each
+    * row's deduplicated shingle array. ceil(bands·rowsPerBand/4) md5s
+    * per shingle, split into 8-hex-char (32-bit) sub-hashes — measured
+    * 8 separate md5s at 3.1 s for sf0.1's shingle volume vs ~2 s
+    * split; the min of a 32-bit sub-hash is the same banding
+    * statistic, and the lexicographic min stays engine-portable.
+    */
+  private def bandSignatures(df: DataFrame, keyCols: Seq[String],
+      shingleSet: Column, bands: Int, rowsPerBand: Int): DataFrame = {
+    val keys = keyCols.map(col)
+    val nh = bands * rowsPerBand
+    val sh = df.select(keys :+ explode(shingleSet).as("__s"): _*)
+    val aggs = (0 until nh).map { k =>
+      val m = md5(concat(lit(s"${k / 4}:"), col("__s")))
+      min(substring(m, (k % 4) * 8 + 1, 8)).as(s"__h$k")
+    }
+    val mh = sh.groupBy(keys: _*).agg(aggs.head, aggs.tail: _*)
+    // ONE aggregation + a band-struct explode, NOT a 4-way union of
+    // per-band selects: under a union, column pruning specializes
+    // each branch to its 2 sub-hashes and the signature aggregate
+    // (shingle explode + md5s — the dominant cost) re-executes per
+    // band (4 scans, seen in the round-7 PlanDump audit); the
+    // explode keeps it one scan, one aggregate, map-side fanout.
+    val bandStructs = array((0 until bands).map { b =>
+      val sig = concat((0 until rowsPerBand).map(r => col(s"__h${b * rowsPerBand + r}")): _*)
+      struct(lit(b).as("__band"), sig.as("__sig"))
+    }: _*)
+    mh.select(keys :+ explode(bandStructs).as("__e"): _*)
+      .select(keys :+ col("__e.__band").as("__band") :+ col("__e.__sig").as("__sig"): _*)
+  }
+
+  /** Distinct word 3-gram shingles of `textCol` (1-based positions; a
+    * text shorter than 3 words yields its whole text as one shingle) —
+    * the shingle set of the document-keyed banded-MinHash tiers.
+    */
+  private def wordTrigrams(textCol: String): Column = expr(
+    s"array_distinct(transform(sequence(1, greatest(size(split($textCol, ' ')) - 2, 1)), " +
+      s"i -> concat_ws(' ', slice(split($textCol, ' '), i, 3))))")
+
   /** Deterministic banded-MinHash near-duplicate CANDIDATE pairs:
     * word-3-gram shingles → `bands × rowsPerBand` min-hashes (min of
     * md5 over seed-prefixed shingles — lexicographic min of hex
@@ -2366,41 +2311,6 @@ object GraftOps {
     * group-by; genuine NEAR-dup buckets stay far below the cap. The
     * guard is one combinable count + equi-join, oracle-expressible.
     */
-  /** The per-document banded min-md5 signature rows
-    * (`idCol`, `__band`, `__sig`) shared by [[minhashBandPairs]] and
-    * the incremental index build/probe pair — ONE signature algebra,
-    * so an index built today collides identically with a delta
-    * signed tomorrow. ceil(bands·rowsPerBand/4) md5s per shingle,
-    * split into 8-hex-char (32-bit) sub-hashes — measured 8 separate
-    * md5s at 3.1 s for sf0.1's shingle volume vs ~2 s split; the min
-    * of a 32-bit sub-hash is the same banding statistic, and the
-    * lexicographic min stays engine-portable.
-    */
-  private def bandSignatures(df: DataFrame, idCol: String, textCol: String,
-      bands: Int, rowsPerBand: Int): DataFrame = {
-    val nh = bands * rowsPerBand
-    val sh = df.select(col(idCol), explode(expr(
-      s"array_distinct(transform(sequence(1, greatest(size(split($textCol, ' ')) - 2, 1)), " +
-        s"i -> concat_ws(' ', slice(split($textCol, ' '), i, 3))))")).as("__s"))
-    val aggs = (0 until nh).map { k =>
-      val m = md5(concat(lit(s"${k / 4}:"), col("__s")))
-      min(substring(m, (k % 4) * 8 + 1, 8)).as(s"__h$k")
-    }
-    val mh = sh.groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
-    // ONE aggregation + a band-struct explode, NOT a 4-way union of
-    // per-band selects: under a union, column pruning specializes
-    // each branch to its 2 sub-hashes and the signature aggregate
-    // (shingle explode + md5s — the dominant cost) re-executes per
-    // band (4 scans, seen in the round-7 PlanDump audit); the
-    // explode keeps it one scan, one aggregate, map-side fanout.
-    val bandStructs = array((0 until bands).map { b =>
-      val sig = concat((0 until rowsPerBand).map(r => col(s"__h${b * rowsPerBand + r}")): _*)
-      struct(lit(b).as("__band"), sig.as("__sig"))
-    }: _*)
-    mh.select(col(idCol), explode(bandStructs).as("__e"))
-      .select(col(idCol), col("__e.__band").as("__band"), col("__e.__sig").as("__sig"))
-  }
-
   def minhashBandPairs(df: DataFrame, idCol: String, textCol: String,
       bands: Int = 4, rowsPerBand: Int = 2, maxBucket: Int = 4096,
       checkpointDir: Option[String] = None): DataFrame = {
@@ -2417,7 +2327,8 @@ object GraftOps {
     // regression, VERDICT r6), reliable checkpoint files under
     // `checkpointDir`, same fault-tolerance contract as
     // connectedComponents.
-    val bandRows = mat(bandSignatures(df, idCol, textCol, bands, rowsPerBand))
+    val bandRows = mat(bandSignatures(df, Seq(idCol), wordTrigrams(textCol),
+      bands, rowsPerBand))
     val kept = bandRows.join(
       bandRows.groupBy("__band", "__sig").agg(count(lit(1)).as("__bn"))
         .filter(col("__bn") <= maxBucket).drop("__bn"),
@@ -2443,7 +2354,7 @@ object GraftOps {
     */
   def minhashIndexBuild(corpus: DataFrame, idCol: String, textCol: String,
       path: String, bands: Int = 4, rowsPerBand: Int = 2): Unit =
-    bandSignatures(corpus, idCol, textCol, bands, rowsPerBand)
+    bandSignatures(corpus, Seq(idCol), wordTrigrams(textCol), bands, rowsPerBand)
       .write.mode("overwrite").partitionBy("__band").parquet(path)
 
   /** Probe half of incremental near-dup: candidate pairs of a DELTA
@@ -2467,7 +2378,8 @@ object GraftOps {
       indexPath: String, delta: DataFrame, idCol: String, textCol: String,
       bands: Int = 4, rowsPerBand: Int = 2, maxBucket: Int = 4096): DataFrame = {
     val mat = reuseMaterializer(delta, None)
-    val deltaSigs = mat(bandSignatures(delta, idCol, textCol, bands, rowsPerBand)
+    val deltaSigs = mat(bandSignatures(delta, Seq(idCol), wordTrigrams(textCol),
+        bands, rowsPerBand)
       .withColumn("__delta", lit(true)))
     val indexSigs = spark.read.parquet(indexPath)
       .select(col(idCol), col("__band"), col("__sig"), lit(false).as("__delta"))

@@ -217,10 +217,10 @@ object FeatureQueries {
     // char i (UTF-8 is variable-width) — O(position) per trigram,
     // O(len²) per document. Splitting to a char array once and
     // indexing (ca[i], O(1)) makes the per-doc work linear:
-    // DedupProbe `ngram` measured 7.49 → 2.47 s at sf0.1 with
-    // bit-identical (lang, tg, c) profiles (both formulations are
-    // character-positioned, so the trigram multiset is the same by
-    // construction; the probe cross-checks the aggregated maps).
+    // measured 7.49 → 2.47 s at sf0.1 with bit-identical (lang, tg, c)
+    // profiles (both formulations are character-positioned, so the
+    // trigram multiset is the same by construction; the aggregated
+    // maps were cross-checked).
     "text_ngram_profile" -> ((s, d) => {
       val w = Window.partitionBy("lang").orderBy(col("c").desc, col("tg").asc)
       load(s, d, "documents")

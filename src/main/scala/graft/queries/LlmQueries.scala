@@ -290,18 +290,6 @@ object LlmQueries {
   def warmMinhashIndex(s: org.apache.spark.sql.SparkSession, d: String): Unit =
     mhIndexFor(s, d)
 
-  // Round 18 note: persisted per-document signature TABLES for
-  // dedup_near/dedup_simhash (VERDICT r17 #4's proposed lever) were
-  // implemented, measured at sf1, and REVERTED — a net loss on both
-  // tiers (90.9→104.6 / 122.7→132.5 s isolated): the cost lives in
-  // candidate generation + verify, not in the per-doc signature
-  // recompute, and UDT/array parquet decode outweighs the seeded
-  // re-hash it replaces. Evidence in OPTIMIZATION_r18.md §4. The
-  // signature FRAME builders stay in GraftOps (minHashSignatures /
-  // simhashSignatures) — the tiers route through them in-query, which
-  // hoists the MinHash transform ahead of the cache (one evaluation
-  // instead of one per join side).
-
   /** Composable (built-ins only) cosine — kept as the reference
     * formulation for functions.ArrayFloatDot, which computes the same
     * IEEE op sequence ~50× faster under codegen. Used by tests to
@@ -331,16 +319,6 @@ object LlmQueries {
     // Round 17: the routing decision is computed once per corpus
     // fingerprint (CollapseGate) and shared with dedup_simhash /
     // dedup_cluster — three tiers, one aggregate.
-    // Round 18 (VERDICT r17 #4): a PERSISTED per-doc signature table
-    // (parquet of __features/__hashes, warm-built, read here) was
-    // implemented and MEASURED — sf1 isolated min-of-3 moved 90.9 →
-    // 104.6 s, i.e. a net LOSS: the tier's cost is the candidate join
-    // + exact-distance verify, not signature recompute, and decoding
-    // VectorUDT columns back out of parquet costs more than the seeded
-    // re-hash it saves (while adding ~25 s of warm-up). Reverted;
-    // evidence in OPTIMIZATION_r18.md §4. The in-query hash
-    // computation IS hoisted ahead of the cache now (one transform
-    // instead of one per join side — GraftOps.minHashSignatures).
     "dedup_near" -> ((s, d) =>
       GraftOps.collapsedPairs(load(s, d, "documents"), "doc_id", "text",
           routeHint = Some(CollapseGate.route(s, d)))(
@@ -360,11 +338,6 @@ object LlmQueries {
     // texts have identical fingerprints (hamming 0, every band-pair
     // table collides, verify Jaccard 1), so within-group pairs carry
     // hamming = 0 and cross pairs carry the representatives' hamming.
-    // Round 18 (VERDICT r17 #4): the persisted signature table was
-    // measured a net LOSS here too (sf1 122.7 → 132.5 s isolated —
-    // string-array parquet decode ≥ the re-hash it saves; the cost
-    // lives in the 28-table candidate join + verify). Reverted — see
-    // dedup_near above and OPTIMIZATION_r18.md §4.
     "dedup_simhash" -> ((s, d) => {
       graft.functions.GraftFunctions.register(s)
       GraftOps.collapsedPairs(load(s, d, "documents"), "doc_id", "text",

@@ -286,7 +286,7 @@ object PipelineQueries {
     // entry/dump by Bench/Verify): one corpus scan feeds the pipeline
     // and each multiply-consumed intermediate materializes exactly
     // once instead of re-executing the quality+dedup subtree per
-    // consumer (up to 4× inside one action, PipelineStages-measured).
+    // consumer (up to 4× inside one action; stage timings in SCALE.md).
     "pipeline_end2end" -> ((s, d) => endToEnd(load(s, d, "documents"))),
   )
 
@@ -323,8 +323,8 @@ object PipelineQueries {
     // the contamination shingle branch and the left-anti keep side, and
     // `clean` below feeds sampleTemperature's count aggregate AND its
     // final join — without materialization the quality+dedup subtree
-    // executes up to 4× inside one action (PipelineStages measured the
-    // decontamination step at +2.6 s of a 4.0 s total). Materialize
+    // executes up to 4× inside one action (the decontamination step
+    // measured +2.6 s of a 4.0 s total, SCALE.md). Materialize
     // each reused cut once; Bench/Verify release the blocks per entry.
     val ded = GraftOps.materializeOnce(dedRaw)
     // stage 3: decontamination — drop survivors sharing a 5-gram

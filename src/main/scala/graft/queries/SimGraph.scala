@@ -9,8 +9,8 @@ import graft.api.GraftOps
   * corpus, built ONCE per (sfDir, embeddings fingerprint) as a
   * commit-log table and read by every graph query — exactly the
   * postings/IVF precedent applied to the last big recomputed artifact.
-  * BfsProbe (round 16) measured graph_bfs as 94% edge build (70.4 s of
-  * 74.5 s at sf1), and graph_triangles / graph_pagerank /
+  * graph_bfs measured 94% edge build at sf1 (70.4 s of 74.5 s; SCALE.md
+  * round 16), and graph_triangles / graph_pagerank /
   * dedup_embed_cos each rebuilt the SAME blocked-cosine pair set from
   * scratch — together ~240 s of the sf1 tail for one artifact. At
   * 100 TB a similarity graph is an index you maintain, not a join you

@@ -158,8 +158,8 @@ object StatsQueries {
       // Round 17 (VERDICT r16 #1): the edge list IS a table now — the
       // persisted SimGraph index ("a production pipeline lands the
       // edge list in a table for the same reason", round-5 comment,
-      // taken at its word). BfsProbe measured this query as 94% edge
-      // build (70.4 s of 74.5 s sf1); against the index it pays only
+      // taken at its word). This query measured 94% edge build
+      // (70.4 s of 74.5 s sf1, SCALE.md); against the index it pays only
       // the seeds + 3 keyed hop joins.
       val p = SimGraph.edges(s, d, minCos = 0.3)
         .select(col("a_id"), col("b_id"))
@@ -221,12 +221,12 @@ object StatsQueries {
       val verts = li.select(col("a").as("id"))
         .unionAll(li.select(col("b").as("id"))).distinct()
       // maxIter 6 + the operator's exact contraction finish (round 17,
-      // re-measured: CcProbe shows the jumped fixpoint needs 18 rounds
+      // re-measured: the jumped fixpoint needs 18 rounds
       // at sf0.1, ~0.45 s/round — the r11 choice of 12 paid 6 more
       // distributed rounds than the driver finish needs). 6 jumped
       // rounds collapse every ≤2^6-hop ball; the residual inter-LABEL
-      // pair graph is metadata-sized (measured 3.0k pairs sf0.1 —
-      // `CcProbe <sfDir> jump 40 6` — well under the 2e6 cap even at sf1's
+      // pair graph is metadata-sized (measured 3.0k pairs sf0.1 after
+      // 6 jumped rounds, SCALE.md — well under the 2e6 cap even at sf1's
       // ~10× growth) and closes exactly in the capped
       // union-find — same pinned answer, ~2.4 s less wall-clock, and
       // the over-cap distributed continuation still guards any scale.

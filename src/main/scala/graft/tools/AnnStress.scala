@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.Tables.load
 import graft.api.GraftOps
@@ -46,15 +46,10 @@ object AnnStress {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val mult = if (args.nonEmpty) args(0).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // plain exchanges in the executed plan → the metric walk below
-      // sees every ShuffleExchangeExec without AQE stage wrappers
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // plain exchanges in the executed plan → the metric walk below
+    // sees every ShuffleExchangeExec without AQE stage wrappers
+    val spark = graft.LocalSession(
+      extraConf = Map("spark.sql.adaptive.enabled" -> "false"))
     spark.sparkContext.setLogLevel("WARN")
     graft.functions.GraftFunctions.register(spark)
 

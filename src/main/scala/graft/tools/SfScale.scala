@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Synthesize the sf1-equivalent dataset (round 13 — VERDICT r12 #1):
@@ -38,13 +38,7 @@ object SfScale {
     if (java.nio.file.Files.exists(marker)) {
       println(s"already built: $out"); return
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalSession(defaultCpus = 16)
     spark.sparkContext.setLogLevel("WARN")
     val off = 100000000L
 

@@ -35,6 +35,15 @@ class LlmOpsSpec extends GraftSpec {
       s"false positives: ${(found -- plantedPairs).take(5)}")
   }
 
+  test("dedup_near leaves nothing cached once releaseMaterialized runs") {
+    val cache = spark.sharedState.cacheManager
+    spark.catalog.clearCache()
+    q("dedup_near").count()
+    graft.api.GraftOps.releaseMaterialized()
+    assert(cache.isEmpty,
+      "a persist outside the reuse-materializer registry outlived the release")
+  }
+
   test("dedup_ngram (blocked 3-gram Jaccard) recovers every planted pair exactly") {
     val found = q("dedup_ngram").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet

@@ -44,9 +44,8 @@ class Round18OpsSpec extends GraftSpec {
       "parquet round-trip of the quantizer diverged from the direct aggregate")
   }
 
-  // The dedup tiers route through the staged signature frames
-  // (GraftOps.minHashSignatures / simhashSignatures) in-query; pin the
-  // staged composition against hand-rolled r17-shaped equivalents —
+  // minHashNearDupPairs hashes the signature frame ahead of its cache
+  // (staged); pin it against the hand-rolled r17-shaped direct join —
   // hashes hoisted ahead of the cache must not change any pair.
   test("minHash tier via staged signatures == r17 direct formulation") {
     import org.apache.spark.ml.feature.{HashingTF, MinHashLSH}

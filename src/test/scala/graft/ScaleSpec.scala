@@ -279,11 +279,31 @@ class ScaleSpec extends GraftSpec {
     }
   }
 
-  test("GraftExtensions registers null_safe_div via the injection API") {
-    val e = new org.apache.spark.sql.SparkSessionExtensions
-    new GraftExtensions().apply(e)
-    // builder ran without throwing; function resolution itself is
-    // covered by GoldenSpec through the registry path
-    succeed
+  test("GraftExtensions injects every GraftFunctions name into a new session") {
+    import org.apache.spark.sql.SparkSession
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val names = Seq("null_safe_div", "array_dot", "simhash64",
+      "char_entropy", "bloom_agg", "bloom_might_contain")
+    assert(graft.functions.GraftFunctions.all.map(_._1) == names)
+    // builder().getOrCreate() hands back the shared session (extensions
+    // ignored) unless no active/default session is set; it reuses the
+    // shared session's SparkContext, so that must exist first
+    val shared = spark
+    val (active, default) = (SparkSession.getActiveSession, SparkSession.getDefaultSession)
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try {
+      val s = SparkSession.builder().withExtensions(new GraftExtensions).getOrCreate()
+      assert(s ne shared, "got the shared session back")
+      val registry = s.sessionState.functionRegistry
+      names.foreach(n =>
+        assert(registry.functionExists(FunctionIdentifier(n)), s"$n not injected"))
+      val r = s.sql("SELECT null_safe_div(1, 0), array_dot(array(1f, 2f), array(3f, 4f))")
+        .head()
+      assert(r.isNullAt(0) && r.getDouble(1) == 11.0)
+    } finally {
+      default.fold(SparkSession.clearDefaultSession())(SparkSession.setDefaultSession)
+      active.fold(SparkSession.clearActiveSession())(SparkSession.setActiveSession)
+    }
   }
 }
